@@ -22,6 +22,9 @@ DataFrame / Structured Streaming:
 - ``streaming``   — Structured Streaming harness for the event-time ops.
 """
 
+# First: every Spark Python worker that unpickles engine code imports this
+# package, and the shim must be in place before the worker's next task.
+from bossarrowstorageengine_spark import _pyworker  # noqa: F401
 from bossarrowstorageengine_spark.engine import Engine, EngineError, EngineResult
 
 __all__ = ["Engine", "EngineError", "EngineResult"]

@@ -48,7 +48,6 @@ def test_bpe_merge_is_greedy_leftmost(tok, pair):
 # split) geometry the split read must return exactly the written rows.
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 @pytest.mark.parametrize("rows_per_batch,split", [(50, 3), (100, 1), (37, 8)])
 def test_stream_seek_splits_lossless_across_geometries(
         spark, rows_per_batch, split):
@@ -84,7 +83,6 @@ def test_stream_seek_splits_lossless_across_geometries(
 # candidate in range.
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 def test_asof_nearest_matches_bruteforce(spark):
     import pandas as pd
 

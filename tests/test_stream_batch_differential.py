@@ -103,7 +103,6 @@ def _assert_same(batch_pdf, stream_pdf):
     pd.testing.assert_frame_equal(b, s, check_dtype=False)
 
 
-@pytest.mark.slow
 def test_differential_stream_tumbling(spark, fixture_dir):
     batch = QUERIES["q_stream_tumbling"](spark, fixture_dir).toPandas()
 
@@ -120,7 +119,6 @@ def test_differential_stream_tumbling(spark, fixture_dir):
     _assert_same(batch, _run_stream(spark, build, "complete"))
 
 
-@pytest.mark.slow
 def test_differential_stream_sliding(spark, fixture_dir):
     batch = QUERIES["q_stream_sliding"](spark, fixture_dir).toPandas()
 
@@ -138,7 +136,6 @@ def test_differential_stream_sliding(spark, fixture_dir):
     _assert_same(batch, _run_stream(spark, build, "complete"))
 
 
-@pytest.mark.slow
 def test_differential_stream_session(spark, fixture_dir):
     batch = QUERIES["q_stream_session"](spark, fixture_dir).toPandas()
 
@@ -164,7 +161,6 @@ def test_differential_stream_session(spark, fixture_dir):
     _assert_same(batch, rolled)
 
 
-@pytest.mark.slow
 def test_differential_stream_dedup(spark, fixture_dir):
     batch = QUERIES["q_stream_dedup"](spark, fixture_dir).toPandas()
 
@@ -180,7 +176,6 @@ def test_differential_stream_dedup(spark, fixture_dir):
     _assert_same(batch[["user_id", "event_type", "first_event_id"]], stream)
 
 
-@pytest.mark.slow
 def test_differential_dedup_within_window(spark, fixture_dir):
     batch = QUERIES["q_dedup_within_window"](spark, fixture_dir).toPandas()
 
@@ -207,7 +202,6 @@ def test_differential_dedup_within_window(spark, fixture_dir):
     _assert_same(batch, rolled)
 
 
-@pytest.mark.slow
 def test_differential_stream_static_enrichment(spark, fixture_dir):
     """Stream-static broadcast enrichment: per-micro-batch joins against a
     static dimension must equal the one-shot batch join — unmatched users
@@ -228,7 +222,6 @@ def test_differential_stream_static_enrichment(spark, fixture_dir):
     _assert_same(batch, stream)
 
 
-@pytest.mark.slow
 def test_differential_watermark_drop_face(spark):
     """q_stream_late's declared semantics, differentially (VERDICT r5 item
     9): a late event behind the watermark must be DROPPED by the streaming

@@ -21,7 +21,6 @@ def _ev(eid, ts, user=1, etype="click", value=1.0):
             "event_type": etype, "value": value, "props": "{}"}
 
 
-@pytest.mark.slow
 def test_tumbling_append_emits_closed_windows_and_drops_late(spark):
     """Append mode only emits a window once the watermark passes its end;
     an event arriving behind the watermark is dropped from state."""
@@ -53,7 +52,6 @@ def test_tumbling_append_emits_closed_windows_and_drops_late(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_streaming_dedup_within_watermark(spark):
     h = FileStreamHarness(spark, streaming_dedup, mode="append")
     try:
@@ -69,7 +67,6 @@ def test_streaming_dedup_within_watermark(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_custom_stateful_running_totals(spark):
     """applyInPandasWithState keeps per-user (count, sum) across micro-
     batches; each batch emits refreshed running totals, and the final
@@ -104,7 +101,6 @@ def test_custom_stateful_running_totals(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_session_window_gap_merge(spark):
     """Events ≤gap apart merge into one session; a >gap hole splits."""
     h = FileStreamHarness(spark, sessionized_counts, mode="append")
@@ -120,7 +116,6 @@ def test_session_window_gap_merge(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_stateful_profile_across_micro_batches(spark):
     """The user_event_profile stateful operator under REAL streaming
     execution: per-user totals + per-type counts survive across
@@ -188,7 +183,6 @@ def test_profile_batch_mode(spark):
     assert got == {1: (4, 15.5, 3, "click"), 2: (1, 5.0, 1, "view")}
 
 
-@pytest.mark.slow
 def test_stream_stream_interval_join(spark):
     """Stream-stream join with watermarks: only clicks within 5 minutes
     after a view (same user) pair up; out-of-window and cross-user clicks
@@ -220,7 +214,6 @@ def test_stream_stream_interval_join(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_foreach_batch_merge_snapshot(spark):
     """foreachBatch CDC merge: the parquet snapshot always holds the
     newest version per (user_id, event_type) across micro-batches."""
@@ -272,7 +265,6 @@ def test_foreach_batch_merge_snapshot(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_foreach_batch_partitioned_table_sink(spark):
     """foreachBatch partitioned sink: micro-batches land under col=value
     directories with one manifest commit per batch, and a replayed batch
@@ -342,7 +334,6 @@ def test_foreach_batch_partitioned_table_sink(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_manifest_mode_stream_reader(spark):
     """On a snapshotted table the stream reader uses manifest-version
     offsets: micro-batches deliver exactly the files each commit ADDED
@@ -407,7 +398,6 @@ def test_manifest_mode_stream_reader(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_snapshotted_sink_chains_into_manifest_mode_reader(spark):
     """End-to-end streaming chain on ONE snapshotted table: the native
     streaming sink commits a manifest per micro-batch, and a downstream
@@ -468,7 +458,6 @@ def test_snapshotted_sink_chains_into_manifest_mode_reader(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_partitioned_sink_idempotence_is_checkpoint_scoped(spark):
     """ADVICE r5: Spark batch ids restart at 0 under a fresh checkpoint, so
     the partitioned sink's idempotence mark is scoped to a stream identity
@@ -561,7 +550,6 @@ def test_partitioned_sink_idempotence_is_checkpoint_scoped(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_changefeed_streams_into_incremental_consumer(spark):
     """End-to-end CDC chain (the q_storage_changefeed story continued):
     change batches appended to a snapshotted feed table are consumed by
@@ -802,7 +790,6 @@ def test_stream_chunk_dedup_tolerates_uncommitted_index_dir(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_session_gap_matches_batch_twin(spark):
     """session_gap_annotate streamed across micro-batches must emit, for
     every event, EXACTLY the batch twin's prefix-final columns (gap,
@@ -861,7 +848,6 @@ def test_stream_session_gap_matches_batch_twin(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_stream_session_gap_real_events_two_batches(spark):
     """The same equivalence on REAL events (sf0.001), streamed as two
     micro-batches split at an event-time boundary (tie groups never
@@ -907,7 +893,6 @@ def test_stream_session_gap_real_events_two_batches(spark):
         h.stop()
 
 
-@pytest.mark.slow
 def test_stream_session_gap_reordered_matches_batch_twin(spark):
     """session_gap_annotate_reordered must produce the batch twin's exact
     annotations from a stream delivered OUT of event-time order across
@@ -973,7 +958,6 @@ def test_stream_session_gap_reordered_matches_batch_twin(spark):
         h.stop()
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("second_ts, kind", [
     ("2024-01-01 00:04:00", "tie group split"),       # == last emitted ts
     ("2024-01-01 00:03:00", "out-of-order arrival"),  # < last emitted ts
@@ -1005,7 +989,6 @@ def test_stream_session_gap_contract_violation_fails_loudly(
         h.stop()
 
 
-@pytest.mark.slow
 def test_stream_session_gap_multi_chunk_group(spark):
     """A user whose micro-batch rows span SEVERAL Arrow chunks (group
     larger than arrow.maxRecordsPerBatch) must still be processed as one
@@ -1133,7 +1116,6 @@ def test_stream_session_gap_reordered_drop_accounting(caplog):
     assert state2.updated[-1] == 2  # lifetime counter carried forward
 
 
-@pytest.mark.slow
 def test_stream_mv_maintain_matches_batch_twin(spark):
     """The streaming MV maintainer must roll the persisted aggregate
     through the feed's commits to EXACTLY the batch key's version table
@@ -1230,7 +1212,6 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
             for r in _mv_rows(mv2)} == want
 
 
-@pytest.mark.slow
 def test_stream_vocab_refresh_matches_batch_trainer(spark):
     """The vocab refresher's final refresh must equal the oracle-gated
     batch trainer's seed vocabulary on the union corpus (q_unigram_train
@@ -1316,7 +1297,6 @@ def test_stream_vocab_refresh_matches_batch_trainer(spark):
     assert _state() == before
 
 
-@pytest.mark.slow
 def test_stream_vocab_refresh_stride(spark):
     """refresh_every=2 must skip the intermediate refresh: two applied
     batches produce exactly ONE vocab version, keyed by the triggering
@@ -1343,7 +1323,6 @@ def test_stream_vocab_refresh_stride(spark):
     assert _refresh_ids(vocab) == [1]
 
 
-@pytest.mark.slow
 def test_stream_mv_maintain_through_feed_compaction(spark):
     """Feed compaction racing a live tailing consumer — the composition
     q_feed_compact + streaming.mv_maintain must already be safe:
@@ -1448,7 +1427,6 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
             for r in _mv_rows(mv2)} == want
 
 
-@pytest.mark.slow
 def test_stream_ann_index_maintain_matches_rebuild(spark):
     """The streaming index maintainer must converge to EXACTLY the
     from-scratch re-bucketing of the final corpus (the batch key's own
@@ -1591,7 +1569,6 @@ def test_ann_index_compact_refuses_future_segments(spark, tmp_path):
         compact_index(spark, idx, thru=7)
 
 
-@pytest.mark.slow
 def test_stream_drift_monitor_matches_batch_key(spark):
     """The streamed drift report must agree with the oracle-gated batch
     key on the same split (reference = even vec_ids, live = odd vec_ids
@@ -1677,7 +1654,6 @@ def _snap_append(spark, table, lo, hi):
      .option("snapshots", "true").mode("append").save(table))
 
 
-@pytest.mark.slow
 def test_stream_bootstrap_then_tail_after_backlog(spark):
     """The standard CDC consumer pattern the r12 coexistence test left
     open: batch-bootstrap from the head at version V, then tail with
@@ -1720,7 +1696,6 @@ def test_stream_bootstrap_then_tail_after_backlog(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_skip_change_commits(spark):
     """skipChangeCommits=true drops a rewrite commit ENTIRELY (no
     re-delivery), and the stream keeps tailing appends after it — the
@@ -1765,7 +1740,6 @@ def test_stream_skip_change_commits(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_bootstrap_after_compaction_then_tail(spark):
     """Snapshot-then-follow ACROSS maintenance: bootstrap from a
     compacted head, tail with startingVersion=head+1 AND
@@ -1813,7 +1787,6 @@ def test_stream_bootstrap_after_compaction_then_tail(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_starting_version_latest(spark):
     """startingVersion=latest: only commits made AFTER stream start."""
     import shutil
@@ -1876,7 +1849,6 @@ def test_stream_reader_option_validation(spark, tmp_path):
     assert r.initialOffset() == {"v": 1}   # table head is v1
 
 
-@pytest.mark.slow
 def test_stream_declared_schema_mismatch_names_column(spark):
     """A declared stream schema whose type disagrees with the file's
     Arrow schema fails NAMING THE COLUMN — not the opaque JVM
@@ -1938,7 +1910,6 @@ def test_validate_declared_schema_unit():
                               columns=["id"])
 
 
-@pytest.mark.slow
 def test_stream_native_maintained_index_tails_feed(spark):
     """The r13 composition END TO END: the LSM index maintainer runs as
     an actual foreachBatch consumer of the arrowipc STREAM READER with
@@ -2059,7 +2030,6 @@ def test_stream_native_maintained_index_tails_feed(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_guarded_index_fails_loudly_on_resurrection(spark):
     """Streaming face of the purge guard: a foreachBatch index tail
     wrapped in apply_index_batch_guarded KILLS the stream query with
@@ -2117,7 +2087,6 @@ def test_stream_guarded_index_fails_loudly_on_resurrection(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_starting_timestamp(spark):
     """startingTimestamp resolves to the first commit at-or-after the
     anchor (Delta's other tailing anchor): a tail anchored between v1
@@ -2184,7 +2153,6 @@ def test_stream_starting_timestamp(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.slow
 def test_stream_mv_fanout_matches_batch_twin(spark):
     """The N-grain fanout maintainer (round 14): ONE foreachBatch rolls
     BOTH grain ledgers forward to EXACTLY the oracle-gated batch key's
@@ -2297,7 +2265,6 @@ def test_stream_mv_fanout_matches_batch_twin(spark):
                        base_fine)
 
 
-@pytest.mark.slow
 def test_stream_mv_fanout_commits_consumer_group_position(spark):
     """The LIVE fanout maintainer as a named consumer group (round 14):
     each micro-batch's applies advance the group's position in the
